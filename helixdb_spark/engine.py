@@ -37,6 +37,7 @@ user-requested point value.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -316,18 +317,114 @@ class HelixSpark:
         if self._closed:
             raise RuntimeError("DB is closed")  # reference db.rs:143-147
 
-    def _reserve_cold_gen(self) -> int:
-        """CAS-reserve the next cold generation number BEFORE any staging
-        write: the bump publishes through ``_save_state`` (write_text_cas),
-        so a writer whose in-memory state is stale raises
-        ConcurrentWriterError here — with zero directories touched — and
-        two live writers can never stage into the same ``gen=N`` path.
-        A reservation whose writer then crashes leaves an unreferenced dir
+    def _stage_generation(self, df: DataFrame) -> tuple[int, list[int]]:
+        """STAGE step of the commit protocol (see ``_publish_generation``):
+        write cold-generation rows to a fresh ``cold/gen=N/`` dir and return
+        ``(N, buckets written)``. An empty write has nothing to publish, so
+        its staged dir is removed at once.
+
+        N is CAS-reserved BEFORE any staging write: the bump publishes
+        through ``_save_state`` (write_text_cas), so a writer whose
+        in-memory state is stale raises ConcurrentWriterError here — with
+        zero directories touched — and its mode("overwrite") can never
+        clobber a generation dir another writer committed. A reservation
+        whose writer then crashes burns N and leaves an unreferenced dir
         ``vacuum()`` collects (manifest liveness is the source of truth)."""
         gen = int(self._state.get("cold_gen_seq", 0))
         self._state["cold_gen_seq"] = gen + 1
         self._save_state()
-        return gen
+        gen_dir = self.layout.cold_gen_path(gen)
+        (
+            df.select("key", "codec", "chunk", "blob", "time_bucket")
+            .write.mode("overwrite")
+            .option("parquet.bloom.filter.enabled#key", "true")
+            .partitionBy("time_bucket")
+            .parquet(gen_dir)
+        )
+        produced = self._fs.list_buckets(gen_dir)
+        if not produced:
+            self._fs.delete(gen_dir)
+        return gen, produced
+
+    def _publish_generation(
+        self, gen: int, produced: Sequence[int], hot_dropped: Sequence[int] = ()
+    ) -> None:
+        """COMMIT and GC steps of the engine's one cold commit protocol.
+        Every cold rewrite — ``compact``, ``optimize``, ``bulk_load``,
+        ``restore_chunks`` — runs it (write-new-then-flip; reference
+        analog: the fdatasync'd LEVEL_INFO superblock,
+        src/types/level_info.rs:98-111):
+
+        1. STAGE (``_stage_generation``) — write the new bucket data to a
+           fresh generation dir ``cold/gen=N/`` (append-only; live data
+           untouched, so this is object-store safe — no in-place mutation,
+           no rename of live data).
+        2. COMMIT — flip the ``produced`` buckets' manifest entries to
+           ``gen`` (plus has_blobs, when the caller set it) in ONE atomic
+           state replace. With ``keep_generations`` > 0 the
+           ``commit_history`` entry rides the same flip, so rollback and
+           time-travel info can never be lost to a crash window. A crash
+           before this point leaves the old manifest: readers never see
+           the staged gen.
+        3. GC — delete the superseded cold bucket dirs and the
+           ``hot_dropped`` hot partitions the commit fully covers.
+           Best-effort: a crash mid-GC leaves garbage that the manifest
+           doesn't reference (invisible to readers; hot leftovers re-win
+           the LWW dedup with identical values) and that a retried commit
+           or ``vacuum()`` collects later. With ``keep_generations`` > 0
+           the dropped hot partitions PARK in trash/ (restorable) instead
+           of dying, superseded cold dirs stay put (the manifest hides
+           them from readers), and only commits that just fell out of the
+           retention window are actually collected."""
+        manifest_before = dict(self._state.get("cold_manifest") or {})
+        manifest = dict(manifest_before)
+        superseded = [
+            (int(manifest[str(b)]), b) for b in produced if str(b) in manifest
+        ]
+        for b in produced:
+            manifest[str(b)] = gen
+        keep = self.options.keep_generations
+        expired: list = []
+        if keep > 0:
+            history = list(self._state.get("commit_history") or [])
+            history.append(
+                {
+                    "gen": gen,
+                    "manifest_before": manifest_before,
+                    "superseded": [[g, b] for g, b in superseded],
+                    "hot_dropped": list(hot_dropped),
+                    # put-sequence watermark at commit time: lets
+                    # scan_asof_commit exclude rows written after this
+                    # commit (time travel)
+                    "seq_at_commit": int(self._state.get("seq", 0)),
+                }
+            )
+            expired, history = history[:-keep], history[-keep:]
+            self._state["commit_history"] = history
+        self._state["cold_manifest"] = manifest
+        self._invalidate_cache()
+        self._save_state()
+
+        if keep > 0:
+            for b in hot_dropped:
+                self._fs.move(
+                    f"{self.layout.hot_path}/time_bucket={b}",
+                    f"{self.layout.trash_path(gen)}/time_bucket={b}",
+                )
+            for e in expired:
+                for old_gen, b in e["superseded"]:
+                    self._fs.delete(
+                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
+                    )
+                self._fs.delete(self.layout.trash_path(int(e["gen"])))
+        else:
+            # the reference purges its memindex range + advances the rick
+            # GC offset (level.rs:430-459); for us the unit of GC is the
+            # partition directory
+            for old_gen, b in superseded:
+                self._fs.delete(f"{self.layout.cold_gen_path(old_gen)}/time_bucket={b}")
+            for b in hot_dropped:
+                self._fs.delete(f"{self.layout.hot_path}/time_bucket={b}")
 
     # ------------------------------------------------------------------ put
     def put(self, entries: DataFrame | Sequence[tuple[int, bytes, bytes]]) -> None:
@@ -425,6 +522,9 @@ class HelixSpark:
         late data into any compacted bucket: hot rows carry a real seq,
         cold rows read back as seq=-1, so the overwrite wins the LWW dedup
         and the next re-compaction folds it in.
+
+        The batch commits through the cold commit protocol
+        (``_publish_generation``), like a compaction.
         """
         self._check_open()
         if self.codecs.custom_dispatch:
@@ -440,93 +540,23 @@ class HelixSpark:
         df = entries.select("ts", "key", "value").withColumn(
             "time_bucket", self.layout.bucket_expr()
         )
-        # the compact() group shape: one shuffle to (key, bucket) chunks,
-        # LWW inside the sorted array (equal ts -> max value, the same
-        # winner a compaction picks for equal seq)
-        raw = F.col("_raw")
-        cold_new = (
-            df.groupBy("key", "time_bucket")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("ts", "value"))
-                ).alias("_raw")
-            )
-            .select(
-                "key",
-                F.lit(ARRAY_CODEC).alias("codec"),
-                F.transform(
-                    F.filter(
-                        raw,
-                        lambda x, i: (i == F.size(raw) - 1)
-                        | (F.get(raw, i + 1)["ts"] != x["ts"]),
-                    ),
-                    lambda x: F.struct(
-                        x["ts"].alias("ts"), x["value"].alias("value")
-                    ),
-                ).alias("chunk"),
-                F.lit(None).cast("binary").alias("blob"),
-                "time_bucket",
-            )
-        )
-        # STAGE under a CAS-reserved generation (compact()'s protocol)
-        gen = self._reserve_cold_gen()
-        gen_dir = self.layout.cold_gen_path(gen)
-        (
-            cold_new.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#key", "true")
-            .partitionBy("time_bucket")
-            .parquet(gen_dir)
-        )
-        produced = self._fs.list_buckets(gen_dir)
+        # the compact() group shape, with no seq: equal ts -> max value, the
+        # same winner a compaction picks for equal seq
+        gen, produced = self._stage_generation(self._chunk_rows(df))
         if not produced:
-            # empty batch: nothing to publish — remove the staged dir
-            # (otherwise it sits orphaned until vacuum(), like the clash path)
-            self._fs.delete(gen_dir)
             return
-        manifest_before = dict(self._state.get("cold_manifest") or {})
+        manifest = self._state.get("cold_manifest") or {}
         hot_buckets = set(self._fs.list_buckets(self.layout.hot_path))
         clash = sorted(
-            b
-            for b in produced
-            if str(b) in manifest_before or b in hot_buckets
+            b for b in produced if str(b) in manifest or b in hot_buckets
         )
         if clash:
-            self._fs.delete(gen_dir)
+            self._fs.delete(self.layout.cold_gen_path(gen))
             raise ValueError(
                 f"bulk_load: time buckets {clash} already hold data — bulk "
                 "ingest owns whole buckets; route live ranges through put()"
             )
-        # COMMIT: one atomic manifest flip, riding the same history /
-        # time-travel machinery as a compaction commit (empty superseded /
-        # hot_dropped: nothing was replaced)
-        manifest = dict(manifest_before)
-        for b in produced:
-            manifest[str(b)] = gen
-        keep = int(getattr(self.options, "keep_generations", 0))
-        expired: list = []
-        if keep > 0:
-            history = list(self._state.get("commit_history") or [])
-            history.append(
-                {
-                    "gen": gen,
-                    "manifest_before": manifest_before,
-                    "superseded": [],
-                    "hot_dropped": [],
-                    "seq_at_commit": int(self._state.get("seq", 0)),
-                }
-            )
-            expired, history = history[:-keep], history[-keep:]
-            self._state["commit_history"] = history
-        self._state["cold_manifest"] = manifest
-        self._invalidate_cache()
-        self._save_state()
-        if keep > 0:
-            for e in expired:
-                for old_gen, b in e["superseded"]:
-                    self._fs.delete(
-                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
-                    )
-                self._fs.delete(self.layout.trash_path(int(e["gen"])))
+        self._publish_generation(gen, produced)
         self._refresh_indexes()
 
     # ------------------------------------------------------------- get/scan
@@ -539,21 +569,26 @@ class HelixSpark:
             n.startswith("time_bucket=") for n in os.listdir(path)
         )
 
-    def _hot_df(self) -> Optional[DataFrame]:
-        if not self._has_data(self.layout.hot_path):
+    def _hot_df(self, path: Optional[str] = None) -> Optional[DataFrame]:
+        """Hot-layout rows under ``path`` (default: the live hot dir; a
+        snapshot read also passes the trash/ dirs compactions parked)."""
+        path = path or self.layout.hot_path
+        if not self._has_data(path):
             return None
         try:
-            return self.spark.read.schema(HOT_SCHEMA).parquet(self.layout.hot_path)
+            return self.spark.read.schema(HOT_SCHEMA).parquet(path)
         except Exception:
             return None
 
-    def _cold_df(self) -> Optional[DataFrame]:
-        """Live cold rows per the committed manifest. The ``gen`` partition
-        column is filtered to exactly the (gen, bucket) pairs the manifest
-        references, so uncommitted staging generations (a crashed compact)
-        and superseded-but-not-yet-GC'd generations are pruned at planning
-        time — their files are never opened."""
-        manifest: dict = self._state.get("cold_manifest") or {}
+    def _cold_df(self, manifest: Optional[dict] = None) -> Optional[DataFrame]:
+        """Cold rows per a bucket→generation manifest (default: the
+        committed one). The ``gen`` partition column is filtered to exactly
+        the (gen, bucket) pairs the manifest references, so uncommitted
+        staging generations (a crashed compact) and superseded-but-not-yet-
+        GC'd generations are pruned at planning time — their files are
+        never opened."""
+        if manifest is None:
+            manifest = self._state.get("cold_manifest") or {}
         if not manifest:
             return None
         try:
@@ -645,24 +680,50 @@ class HelixSpark:
         function of (ts, key) and the dedup groups by exactly (ts, key), so
         filtering above or below the aggregate keeps the same groups."""
         if self.options.cache_reads:
-            df = self._cached_entries()
-            if ts_lo is not None:
-                df = df.where(F.col("ts") >= ts_lo)
-            if ts_hi is not None:
-                df = df.where(F.col("ts") <= ts_hi)
-            cutoff = self._state.get("outdate_cutoff")
-            if cutoff is not None:
-                df = df.where(F.col("ts") > int(cutoff))
-            if pre_filter is not None:
-                df = df.where(pre_filter)
-            if probe_df is not None:
-                df = df.join(
-                    F.broadcast(probe_df),
-                    (F.col("ts") == F.col("p_ts")) & (F.col("key") == F.col("p_key")),
-                    "left_semi",
-                )
-            return df
+            return self._where_read(
+                self._cached_entries(),
+                ts_lo,
+                ts_hi,
+                pre_filter,
+                probe_df,
+                self._state.get("outdate_cutoff"),
+            )
         return self._entries_df_raw(ts_lo, ts_hi, pre_filter, probe_df)
+
+    def _where_read(
+        self,
+        df: DataFrame,
+        ts_lo: Optional[int],
+        ts_hi: Optional[int],
+        pre_filter,
+        probe_df: Optional[DataFrame],
+        cutoff: Optional[int],
+    ) -> DataFrame:
+        """The read predicates: ts bounds (plus the bucket bounds they
+        imply, which reach a parquet scan as partition filters), the
+        retention ``cutoff``, ``pre_filter`` and the exact ``probe_df``
+        probes (broadcast-semi-joined)."""
+        if ts_lo is not None:
+            df = df.where(
+                (F.col("time_bucket") >= self.layout.bucket_of(ts_lo))
+                & (F.col("ts") >= ts_lo)
+            )
+        if ts_hi is not None:
+            df = df.where(
+                (F.col("time_bucket") <= self.layout.bucket_of(ts_hi))
+                & (F.col("ts") <= ts_hi)
+            )
+        if cutoff is not None:
+            df = df.where(F.col("ts") > int(cutoff))
+        if pre_filter is not None:
+            df = df.where(pre_filter)
+        if probe_df is not None:
+            df = df.join(
+                F.broadcast(probe_df),
+                (F.col("ts") == F.col("p_ts")) & (F.col("key") == F.col("p_key")),
+                "left_semi",
+            )
+        return df
 
     def _entries_df_raw(
         self,
@@ -670,6 +731,9 @@ class HelixSpark:
         ts_hi: Optional[int] = None,
         pre_filter=None,
         probe_df: Optional[DataFrame] = None,
+        manifest: Optional[dict] = None,
+        parked: Sequence[str] = (),
+        seq_cut: Optional[int] = None,
     ) -> DataFrame:
         """Union hot + cold as logical entries with last-write-wins dedup on
         (ts, key) (overwrite semantics — reference src/file/rick.rs:403-417).
@@ -687,12 +751,21 @@ class HelixSpark:
         early is equivalent — and the window shuffle then carries only the
         selected rows instead of every entry in the ts range (at scale, the
         difference between shuffling kilobytes and shuffling the table).
+
+        The defaults read the live view. A snapshot read (see
+        :meth:`scan_asof_commit`) passes a historical cold ``manifest``, the
+        ``parked`` trash/ dirs holding hot partitions later commits
+        dropped, and ``seq_cut``: hot rows put at or after it are hidden.
+        The current retention cutoff filters only the live view; a
+        snapshot shows what its commit saw, as far as retention has not
+        physically dropped it.
         """
-        parts = []
-        hot = self._hot_df()
-        if hot is not None:
-            parts.append(hot)
-        cold = self._cold_df()
+        parts = [
+            hot
+            for hot in map(self._hot_df, [self.layout.hot_path, *parked])
+            if hot is not None
+        ]
+        cold = self._cold_df(manifest)
         if cold is not None:
             parts.append(self._decode_cold(cold))
         if not parts:
@@ -700,28 +773,12 @@ class HelixSpark:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-
-        if ts_lo is not None:
-            df = df.where(
-                (F.col("time_bucket") >= self.layout.bucket_of(ts_lo))
-                & (F.col("ts") >= ts_lo)
-            )
-        if ts_hi is not None:
-            df = df.where(
-                (F.col("time_bucket") <= self.layout.bucket_of(ts_hi))
-                & (F.col("ts") <= ts_hi)
-            )
-        cutoff = self._state.get("outdate_cutoff")
-        if cutoff is not None:
-            df = df.where(F.col("ts") > int(cutoff))
-        if pre_filter is not None:
-            df = df.where(pre_filter)
-        if probe_df is not None:
-            df = df.join(
-                F.broadcast(probe_df),
-                (F.col("ts") == F.col("p_ts")) & (F.col("key") == F.col("p_key")),
-                "left_semi",
-            )
+        if seq_cut is not None:
+            # cold rows carry seq=-1 and always pass — a snapshot's cold
+            # generations were staged before its commit
+            df = df.where(F.col("seq") < int(seq_cut))
+        cutoff = self._state.get("outdate_cutoff") if manifest is None else None
+        df = self._where_read(df, ts_lo, ts_hi, pre_filter, probe_df, cutoff)
 
         # last-write-wins as a hash aggregation (max over (seq, value) struct)
         # instead of a row_number window: aggregates get map-side partial
@@ -911,42 +968,26 @@ class HelixSpark:
         the reference's ``no_decompress`` exists for, src/option.rs:
         131-148, completed into a backup/replicate pair).
 
-        Chunks land in a fresh CAS-reserved cold generation partitioned by
-        ``time_bucket``; the manifest flips the imported buckets to that
-        generation in one atomic commit (write-new-then-flip — a crash
-        before the flip leaves an unreferenced dir ``vacuum()`` collects).
-        A bucket already present is REPLACED (restore-wins); the
-        destination must be opened with a codec registry that knows the
-        imported codec names or later reads of those keys will fail."""
+        The chunks commit as one cold generation through the cold commit
+        protocol (``_publish_generation``), like a compaction: a crash
+        before the flip leaves an unreferenced dir ``vacuum()`` collects,
+        and under ``keep_generations`` the commit is retained in history,
+        so ``rollback_compaction`` undoes it. A bucket already present is
+        REPLACED (restore-wins); the destination must be opened with a
+        codec registry that knows the imported codec names or later reads
+        of those keys will fail."""
         self._check_open()
-        gen = self._reserve_cold_gen()
-        path = self.layout.cold_gen_path(gen)
-        (
-            chunks.select("key", "codec", "chunk", "blob", "time_bucket")
-            .write.mode("overwrite")
-            .partitionBy("time_bucket")
-            .parquet(path)
-        )
-        buckets = [
-            int(r["time_bucket"])
-            for r in self.spark.read.parquet(path)
-            .select("time_bucket")
-            .distinct()
-            .collect()
-        ]
-        manifest = dict(self._state.get("cold_manifest") or {})
-        for b in buckets:
-            manifest[str(b)] = gen
-        self._state["cold_manifest"] = manifest
+        gen, produced = self._stage_generation(chunks)
+        if not produced:
+            return
         if not self._state.get("has_blobs") and not (
-            self.spark.read.parquet(path)
+            self.spark.read.parquet(self.layout.cold_gen_path(gen))
             .where(F.col("codec") != ARRAY_CODEC)
             .isEmpty()
         ):
             # must land in the SAME commit that makes blob rows visible
             self._state["has_blobs"] = True
-        self._save_state()
-        self._invalidate_cache()
+        self._publish_generation(gen, produced)
 
     def direct_get(self, shard_id: int, ts: int, key: bytes) -> Optional[bytes]:
         """Point lookup naming the shard (reference src/db.rs:57-65
@@ -956,15 +997,9 @@ class HelixSpark:
         would hold."""
         return self.get(ts, key)
 
-    def get_many(self, probes: Sequence[tuple[int, bytes]]) -> dict[tuple[int, bytes], bytes]:
-        """Batched point lookups — one job for N probes (the reference
-        coalesces batched rick reads the same way, src/file/rick.rs:116-154).
-        This is the shape benchmarks should use: per-get job launch is
-        Spark's latency floor, amortized here."""
-        self._check_open()
-        if not probes:
-            return {}
-        probe_df = self.spark.createDataFrame(
+    def _probe_df(self, probes: Sequence[tuple[int, bytes]]) -> DataFrame:
+        """The (p_ts, p_key) frame of a batched lookup's probes."""
+        return self.spark.createDataFrame(
             [(int(t), bytes(k)) for t, k in probes],
             T.StructType(
                 [
@@ -973,6 +1008,16 @@ class HelixSpark:
                 ]
             ),
         )
+
+    def get_many(self, probes: Sequence[tuple[int, bytes]]) -> dict[tuple[int, bytes], bytes]:
+        """Batched point lookups — one job for N probes (the reference
+        coalesces batched rick reads the same way, src/file/rick.rs:116-154).
+        This is the shape benchmarks should use: per-get job launch is
+        Spark's latency floor, amortized here."""
+        self._check_open()
+        if not probes:
+            return {}
+        probe_df = self._probe_df(probes)
         lo = min(t for t, _ in probes)
         hi = max(t for t, _ in probes)
         hits = (
@@ -1000,15 +1045,7 @@ class HelixSpark:
         self._check_open()
         if not probes:
             return {}
-        probe_df = self.spark.createDataFrame(
-            [(int(t), bytes(k)) for t, k in probes],
-            T.StructType(
-                [
-                    T.StructField("p_ts", T.LongType(), False),
-                    T.StructField("p_key", T.BinaryType(), False),
-                ]
-            ),
-        )
+        probe_df = self._probe_df(probes)
         hi = max(t for t, _ in probes)
         cutoff = self._state.get("outdate_cutoff")
         ts_lo = (cutoff + 1) if cutoff is not None else None
@@ -1069,6 +1106,17 @@ class HelixSpark:
         provide (option.rs:150-153).
         """
         self._check_open()
+        return self._scan(self._entries_df, time_range, key_range, comparator)
+
+    def _scan(
+        self,
+        entries,
+        time_range: tuple[int, int],
+        key_range: Optional[tuple[bytes, bytes]],
+        comparator: comparators.Comparator,
+    ) -> DataFrame:
+        """:meth:`scan` over an entry view (``entries`` takes
+        ``_entries_df``'s ts_lo/ts_hi/pre_filter keywords)."""
         ts_lo, ts_hi = time_range
         key_pred = None
         if key_range is not None and comparator is not None:
@@ -1079,7 +1127,7 @@ class HelixSpark:
             key_pred = (kexpr >= comparator(F.lit(bytes(lo)))) & (
                 kexpr <= comparator(F.lit(bytes(hi)))
             )
-        df = self._entries_df(ts_lo=ts_lo, ts_hi=ts_hi, pre_filter=key_pred)
+        df = entries(ts_lo=ts_lo, ts_hi=ts_hi, pre_filter=key_pred)
         df = df.select("ts", "key", "value")
         if comparator is not None:
             df = df.orderBy(comparator(F.col("key")), F.col("ts"))
@@ -1104,7 +1152,8 @@ class HelixSpark:
         plus the put-sequence watermark. A snapshot read is then: current
         hot ∪ the rewound commits' parked hot partitions ∪ cold per the
         historical manifest, with rows put after the snapshot's sequence
-        watermark filtered out, under the same LWW dedup as a live scan.
+        watermark filtered out, through the same read predicates and LWW
+        dedup as a live scan (``_entries_df_raw``).
         The reference cannot express this — its LEVEL_INFO advance is
         one-way (src/types/level_info.rs:98-111); engine addition.
 
@@ -1131,74 +1180,16 @@ class HelixSpark:
                     "between)"
                 )
         target = tail[0]
-        seq_cut = target.get("seq_at_commit")
-        manifest = {
-            str(b): int(g)
-            for b, g in (target.get("manifest_before") or {}).items()
-        }
-
-        parts = []
-        hot = self._hot_df()
-        if hot is not None:
-            parts.append(hot)
-        for e in tail:  # hot partitions the rewound commits parked
-            trash = self.layout.trash_path(int(e["gen"]))
-            if self._fs.list_buckets(trash):
-                try:
-                    parts.append(
-                        self.spark.read.schema(HOT_SCHEMA).parquet(trash)
-                    )
-                except Exception:
-                    pass
-        if manifest:
-            try:
-                cold = self.spark.read.schema(COLD_GEN_SCHEMA).parquet(
-                    self.layout.cold_path
-                )
-                by_gen: dict[int, list[int]] = {}
-                for bucket, gen in manifest.items():
-                    by_gen.setdefault(int(gen), []).append(int(bucket))
-                pred = None
-                for gen, buckets in by_gen.items():
-                    p = (F.col("gen") == gen) & F.col("time_bucket").isin(buckets)
-                    pred = p if pred is None else (pred | p)
-                parts.append(self._decode_cold(cold.where(pred).drop("gen")))
-            except Exception:
-                pass
-        if not parts:
-            return self.spark.createDataFrame([], HOT_SCHEMA).select(
-                "ts", "key", "value"
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        if seq_cut is not None:
-            # cold rows carry seq=-1 and always pass — their generations are
-            # manifest_before-listed, i.e. staged before the snapshot commit
-            df = df.where(F.col("seq") < int(seq_cut))
-
-        ts_lo, ts_hi = time_range
-        df = df.where(
-            (F.col("time_bucket") >= self.layout.bucket_of(ts_lo))
-            & (F.col("time_bucket") <= self.layout.bucket_of(ts_hi))
-            & (F.col("ts") >= ts_lo)
-            & (F.col("ts") <= ts_hi)
+        snapshot = functools.partial(
+            self._entries_df_raw,
+            manifest={
+                str(b): int(g)
+                for b, g in (target.get("manifest_before") or {}).items()
+            },
+            parked=[self.layout.trash_path(int(e["gen"])) for e in tail],
+            seq_cut=target.get("seq_at_commit"),
         )
-        if key_range is not None and comparator is not None:
-            lo, hi = key_range
-            kexpr = comparator(F.col("key"))
-            df = df.where(
-                (kexpr >= comparator(F.lit(bytes(lo))))
-                & (kexpr <= comparator(F.lit(bytes(hi))))
-            )
-        df = (
-            df.groupBy("ts", "key")
-            .agg(F.max(F.struct("seq", "value")).alias("_w"))
-            .select("ts", "key", F.col("_w.value").alias("value"))
-        )
-        if comparator is not None:
-            df = df.orderBy(comparator(F.col("key")), F.col("ts"))
-        return df
+        return self._scan(snapshot, time_range, key_range, comparator)
 
     def scan_iter(
         self,
@@ -1291,21 +1282,9 @@ class HelixSpark:
         re-compacting after late data is safe (unlike the reference, whose
         late puts become unreachable — SURVEY.md §2.10 caveat).
 
-        Commit protocol (write-new-then-flip; reference analog: the
-        fdatasync'd LEVEL_INFO superblock, src/types/level_info.rs:98-111):
-
-        1. STAGE — write the merged bucket data to a fresh generation dir
-           ``cold/gen=N/`` (append-only; live data untouched, so this is
-           object-store safe — no in-place mutation, no rename of live data).
-        2. COMMIT — flip the bucket→gen manifest entries (plus has_blobs and
-           the gen counter) in ONE atomic state replace. A crash before this
-           point leaves the old manifest: readers never see the staged gen,
-           and the next compact overwrites the same staging gen number.
-        3. GC — delete superseded cold bucket dirs and fully-covered hot
-           partitions. Best-effort: a crash mid-GC leaves garbage that the
-           manifest doesn't reference (invisible to readers; hot leftovers
-           re-win the LWW dedup with identical values) and that a retried
-           compact or ``vacuum()`` collects later.
+        Commits through the cold commit protocol (``_publish_generation``):
+        stage a fresh generation, flip the manifest atomically, then GC the
+        superseded cold dirs and the fully covered hot partitions.
         """
         self._check_open()
         hot = self._hot_df()
@@ -1337,19 +1316,32 @@ class HelixSpark:
                     )
                 )
             )
+        gen, produced = self._stage_generation(self._chunk_rows(src, "seq"))
 
-        # ONE shuffle: group straight to (key, bucket) chunks carrying seq,
-        # then last-write-wins-dedup INSIDE the sorted array (keep the last
-        # element of every ts-run) — replaces the old window-dedup shuffle +
-        # re-shuffle. sort_array orders by (ts, seq), so the kept element is
-        # the highest seq per ts, i.e. the same winner the reference's
-        # offset-ordered memindex rebuild picks (src/file/rick.rs:403-417).
+        full_lo = start_ts // self.layout.rick_range
+        if start_ts % self.layout.rick_range:
+            full_lo += 1  # never drop a bucket the range only partially covers
+        full_hi = (end_ts + 1) // self.layout.rick_range - 1
+        self._publish_generation(gen, produced, list(range(full_lo, full_hi + 1)))
+        self._refresh_indexes(bounds=(start_ts, end_ts))
+
+    def _chunk_rows(self, src: DataFrame, *tiebreak: str) -> DataFrame:
+        """Entry rows (ts, key, value, time_bucket, *tiebreak) -> cold-
+        generation rows, in ONE shuffle: group straight to (key, bucket)
+        chunks, then last-write-wins-dedup INSIDE the sorted array (keep
+        the last element of every ts-run) — no window-dedup shuffle +
+        re-shuffle. sort_array orders by (ts, *tiebreak, value), so the
+        kept element is the highest tiebreak per ts (compact passes seq:
+        the same winner the reference's offset-ordered memindex rebuild
+        picks, src/file/rick.rs:403-417), then the max value. Each key's
+        chunk is then stored natively or through the registry's blob codec.
+        """
         raw = F.col("_raw")
         grouped = (
             src.groupBy("key", "time_bucket")
             .agg(
                 F.sort_array(
-                    F.collect_list(F.struct("ts", "seq", "value"))
+                    F.collect_list(F.struct("ts", *tiebreak, "value"))
                 ).alias("_raw")
             )
             .select(
@@ -1370,144 +1362,59 @@ class HelixSpark:
             )
         )
 
-        self._invalidate_cache()
         registry = self.codecs
         if not registry.custom_dispatch:
             # default dispatch: every key stores natively — no Python at all
-            cold_new = grouped.select(
+            return grouped.select(
                 "key",
                 F.lit(ARRAY_CODEC).alias("codec"),
                 "chunk",
                 F.lit(None).cast("binary").alias("blob"),
                 "time_bucket",
             )
-        else:
-            # persisted at the COMMIT below — the flag must hit disk in the
-            # same atomic flip that makes blob rows visible, or a reopen
-            # after a direct compact() would skip the decompress UDF and
-            # explode would silently drop the blob rows
-            self._state["has_blobs"] = True
+        # persisted no later than the commit — the flag must hit disk by
+        # the atomic flip that makes blob rows visible, or a reopen after
+        # a direct compact() would skip the decompress UDF and explode
+        # would silently drop the blob rows
+        self._state["has_blobs"] = True
 
-            @F.pandas_udf(T.StringType())
-            def pick_codec(key_s):
-                import pandas as pd
+        @F.pandas_udf(T.StringType())
+        def pick_codec(key_s):
+            import pandas as pd
 
-                return pd.Series([registry.dispatch(bytes(k)) for k in key_s])
+            return pd.Series([registry.dispatch(bytes(k)) for k in key_s])
 
-            @F.pandas_udf(T.BinaryType())
-            def compress(codec_s, key_s, chunk_s):
-                import pandas as pd
+        @F.pandas_udf(T.BinaryType())
+        def compress(codec_s, key_s, chunk_s):
+            import pandas as pd
 
-                out = []
-                # when()/otherwise() does not short-circuit pandas UDFs —
-                # array rows reach here too and must yield a null blob.
-                for codec, key, chunk in zip(codec_s, key_s, chunk_s):
-                    if codec == ARRAY_CODEC:
-                        out.append(None)
-                        continue
-                    pairs = [(int(e["ts"]), bytes(e["value"])) for e in chunk]
-                    out.append(registry.get(codec).compress(bytes(key), pairs))
-                return pd.Series(out)
+            out = []
+            # when()/otherwise() does not short-circuit pandas UDFs —
+            # array rows reach here too and must yield a null blob.
+            for codec, key, chunk in zip(codec_s, key_s, chunk_s):
+                if codec == ARRAY_CODEC:
+                    out.append(None)
+                    continue
+                pairs = [(int(e["ts"]), bytes(e["value"])) for e in chunk]
+                out.append(registry.get(codec).compress(bytes(key), pairs))
+            return pd.Series(out)
 
-            cold_new = (
-                grouped.withColumn("codec", pick_codec("key"))
-                .withColumn(
-                    "blob",
-                    F.when(
-                        F.col("codec") == F.lit(ARRAY_CODEC),
-                        F.lit(None).cast("binary"),
-                    ).otherwise(compress("codec", "key", "chunk")),
-                )
-                .withColumn(
-                    "chunk",
-                    F.when(
-                        F.col("codec") == F.lit(ARRAY_CODEC), F.col("chunk")
-                    ).otherwise(F.lit(None).cast(CHUNK_TYPE)),
-                )
-                .select("key", "codec", "chunk", "blob", "time_bucket")
+        return (
+            grouped.withColumn("codec", pick_codec("key"))
+            .withColumn(
+                "blob",
+                F.when(
+                    F.col("codec") == F.lit(ARRAY_CODEC),
+                    F.lit(None).cast("binary"),
+                ).otherwise(compress("codec", "key", "chunk")),
             )
-
-        # 1. STAGE: write the replacement bucket partitions to a fresh
-        # generation dir. The generation number is CAS-RESERVED first (same
-        # discipline as put()'s seq): a writer holding stale state loses the
-        # reservation with ConcurrentWriterError BEFORE its mode("overwrite")
-        # can clobber a generation dir another writer already committed —
-        # reserved numbers are globally unique, so no two writers ever stage
-        # to the same path. A crash after the reservation burns a gen number
-        # and leaves an unreferenced dir that vacuum() collects.
-        gen = self._reserve_cold_gen()
-        gen_dir = self.layout.cold_gen_path(gen)
-        (
-            cold_new.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#key", "true")
-            .partitionBy("time_bucket")
-            .parquet(gen_dir)
+            .withColumn(
+                "chunk",
+                F.when(
+                    F.col("codec") == F.lit(ARRAY_CODEC), F.col("chunk")
+                ).otherwise(F.lit(None).cast(CHUNK_TYPE)),
+            )
         )
-        produced = self._fs.list_buckets(gen_dir)
-        if not produced:  # defensive: src was non-empty, so this can't fire
-            return
-
-        # 2. COMMIT: one atomic state flip publishes the new generation.
-        manifest_before = dict(self._state.get("cold_manifest") or {})
-        manifest = dict(manifest_before)
-        superseded = [
-            (int(manifest[str(b)]), b) for b in produced if str(b) in manifest
-        ]
-        for b in produced:
-            manifest[str(b)] = gen
-        full_lo = start_ts // self.layout.rick_range
-        if start_ts % self.layout.rick_range:
-            full_lo += 1  # never drop a bucket the range only partially covers
-        full_hi = (end_ts + 1) // self.layout.rick_range - 1
-        hot_dropped = list(range(full_lo, full_hi + 1))
-        keep = int(getattr(self.options, "keep_generations", 0))
-        if keep > 0:
-            # the history entry rides the SAME atomic flip as the manifest,
-            # so rollback info can never be lost to a crash window
-            history = list(self._state.get("commit_history") or [])
-            history.append(
-                {
-                    "gen": gen,
-                    "manifest_before": manifest_before,
-                    "superseded": [[g, b] for g, b in superseded],
-                    "hot_dropped": hot_dropped,
-                    # put-sequence watermark at commit time: lets
-                    # scan_asof_commit exclude rows written after this
-                    # commit (time travel); rides the same atomic flip
-                    "seq_at_commit": int(self._state.get("seq", 0)),
-                }
-            )
-            expired, history = history[:-keep], history[-keep:]
-            self._state["commit_history"] = history
-        self._state["cold_manifest"] = manifest
-        self._save_state()
-
-        # 3. GC (best-effort; see the commit-protocol docstring). With
-        # keep_generations > 0 the dropped hot partitions PARK in trash/
-        # (restorable) instead of dying, superseded cold dirs stay put
-        # (the manifest hides them from readers), and only commits that
-        # just fell out of the retention window are actually collected.
-        if keep > 0:
-            for b in hot_dropped:
-                self._fs.move(
-                    f"{self.layout.hot_path}/time_bucket={b}",
-                    f"{self.layout.trash_path(gen)}/time_bucket={b}",
-                )
-            for e in expired:
-                for old_gen, b in e["superseded"]:
-                    self._fs.delete(
-                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
-                    )
-                self._fs.delete(self.layout.trash_path(int(e["gen"])))
-        else:
-            # Drop compacted hot partitions (the reference purges its
-            # memindex range + advances the rick GC offset — level.rs:
-            # 430-459; for us the unit of GC is the partition directory).
-            for old_gen, b in superseded:
-                self._fs.delete(f"{self.layout.cold_gen_path(old_gen)}/time_bucket={b}")
-            for b in hot_dropped:
-                self._fs.delete(f"{self.layout.hot_path}/time_bucket={b}")
-        self._refresh_indexes(bounds=(start_ts, end_ts))
 
     def rollback_compaction(self) -> bool:
         """Undo the most recent compaction commit — restore the previous
@@ -1607,12 +1514,10 @@ class HelixSpark:
         files; at 100 TB that accumulates into the classic small-file tax
         (footer reads + task-per-file scheduling). This op rewrites ONLY
         buckets whose file count exceeds ceil(bytes/target), routing rows
-        to ceil-many splits by key hash, and commits with the exact
-        compact() protocol: stage to a fresh generation, flip the manifest
-        atomically (CAS), GC or retain the superseded dirs per
-        ``keep_generations`` — so a crash at any point leaves the previous
-        packing live, and ``rollback_compaction`` undoes an optimize the
-        same way it undoes a compact.
+        to ceil-many splits by key hash, and commits through compact()'s
+        cold commit protocol (``_publish_generation``) — so a crash at any
+        point leaves the previous packing live, and ``rollback_compaction``
+        undoes an optimize the same way it undoes a compact.
 
         Pure rewrite: row content is byte-identical (LWW merge already
         happened at compact time); only file boundaries change — asserted
@@ -1621,7 +1526,7 @@ class HelixSpark:
         self._check_open()
         import math
 
-        manifest: dict = dict(self._state.get("cold_manifest") or {})
+        manifest: dict = self._state.get("cold_manifest") or {}
         plan: dict[int, int] = {}
         for b, g in manifest.items():
             d = f"{self.layout.cold_gen_path(int(g))}/time_bucket={int(b)}"
@@ -1637,16 +1542,7 @@ class HelixSpark:
         # live rows of exactly the planned buckets, via the same pruned
         # cold read path queries use (uncommitted/superseded gens never
         # opened)
-        df = self.spark.read.schema(COLD_GEN_SCHEMA).parquet(
-            self.layout.cold_path
-        )
-        pred = None
-        for b in plan:
-            p = (F.col("gen") == int(manifest[str(b)])) & (
-                F.col("time_bucket") == b
-            )
-            pred = p if pred is None else (pred | p)
-        rows = df.where(pred).drop("gen")
+        rows = self._cold_df({str(b): manifest[str(b)] for b in plan})
         # route each bucket's rows into its `want` splits by key hash, so
         # one write pass packs every planned bucket to its target count
         want_df = F.broadcast(
@@ -1663,55 +1559,9 @@ class HelixSpark:
             # scans skip more of the packed file than of the original
             # task-ordered files — free at rewrite time
             .sortWithinPartitions("key")
-            .select("key", "codec", "chunk", "blob", "time_bucket")
         )
-        # CAS-reserve the generation before staging (see compact()): a
-        # stale writer dies here instead of overwriting a committed dir.
-        gen = self._reserve_cold_gen()
-        gen_dir = self.layout.cold_gen_path(gen)
-        (
-            staged.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#key", "true")
-            .partitionBy("time_bucket")
-            .parquet(gen_dir)
-        )
-        produced = self._fs.list_buckets(gen_dir)
-
-        # COMMIT + GC: compact()'s protocol with no hot partitions involved
-        manifest_before = dict(manifest)
-        superseded = [(int(manifest[str(b)]), b) for b in produced]
-        for b in produced:
-            manifest[str(b)] = gen
-        keep = int(getattr(self.options, "keep_generations", 0))
-        expired: list = []
-        if keep > 0:
-            history = list(self._state.get("commit_history") or [])
-            history.append(
-                {
-                    "gen": gen,
-                    "manifest_before": manifest_before,
-                    "superseded": [[g, b] for g, b in superseded],
-                    "hot_dropped": [],
-                    "seq_at_commit": int(self._state.get("seq", 0)),
-                }
-            )
-            expired, history = history[:-keep], history[-keep:]
-            self._state["commit_history"] = history
-        self._state["cold_manifest"] = manifest
-        self._save_state()
-        self._invalidate_cache()
-        if keep > 0:
-            for e in expired:
-                for old_gen, b in e["superseded"]:
-                    self._fs.delete(
-                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
-                    )
-                self._fs.delete(self.layout.trash_path(int(e["gen"])))
-        else:
-            for old_gen, b in superseded:
-                self._fs.delete(
-                    f"{self.layout.cold_gen_path(old_gen)}/time_bucket={b}"
-                )
+        gen, produced = self._stage_generation(staged)
+        self._publish_generation(gen, produced)
         self._refresh_indexes()
         return {b: plan[b] for b in produced}
 

@@ -7,6 +7,7 @@ the pure-Python codec properties run at full default example counts.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -100,21 +101,60 @@ _op_st = st.one_of(
     ),
     st.tuples(st.just("outdate"), st.integers(min_value=0, max_value=400)),
     st.tuples(st.just("rollback"), st.none()),
+    st.tuples(st.just("optimize"), st.none()),
+    st.tuples(
+        st.just("restore"),
+        st.tuples(
+            st.integers(min_value=0, max_value=499),
+            st.integers(min_value=0, max_value=499),
+        ),
+    ),
 )
 
 
-@given(ops=st.lists(_op_st, min_size=2, max_size=6))
+def _assert_cold_invariants(db) -> None:
+    """Liveness: every on-disk cold ``gen=G/time_bucket=B`` below the next
+    generation number is referenced by the manifest or by the retained
+    commit history (higher G are staging leftovers). Uniqueness: each
+    (ts, key) appears at most once across the live cold chunks."""
+    state = db._state
+    live = {(int(g), int(b)) for b, g in state["cold_manifest"].items()}
+    for e in state.get("commit_history") or []:
+        live |= {(int(g), int(b)) for b, g in e["manifest_before"].items()}
+        live |= {(int(g), int(b)) for g, b in e["superseded"]}
+    cold = db.layout.cold_path
+    for name in os.listdir(cold) if os.path.isdir(cold) else []:
+        gen = int(name.split("=", 1)[1])
+        if gen >= state["cold_gen_seq"]:
+            continue
+        for sub in os.listdir(f"{cold}/{name}"):
+            if sub.startswith("time_bucket="):
+                bucket = int(sub.split("=", 1)[1])
+                assert (gen, bucket) in live, f"unreferenced {name}/{sub}"
+    ids = [
+        (e["ts"], bytes(r["key"]))
+        for r in db.scan_raw().collect()
+        for e in r["chunk"]
+    ]
+    assert len(ids) == len(set(ids))
+
+
+@given(
+    ops=st.lists(_op_st, min_size=2, max_size=6),
+    keep=st.sampled_from([0, 2]),
+)
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_mutation_sequence_matches_model(spark, ops):
-    """Any interleaving of put / compact / outdate / rollback agrees with
-    a trivial last-write-wins + retention model. Exercises the generation-manifest
-    commit across MULTIPLE compactions (gen chains, bucket re-merges) and
-    the cutoff/manifest interplay — the state space the example tests
-    can't enumerate."""
+def test_mutation_sequence_matches_model(spark, ops, keep):
+    """Any interleaving of put / compact / outdate / rollback / optimize /
+    self-restore agrees with a trivial last-write-wins + retention model.
+    Exercises the generation-manifest commit across MULTIPLE commits (gen
+    chains, bucket re-merges) and the cutoff/manifest interplay — the
+    state space the example tests can't enumerate — and ends by checking
+    the cold layout's liveness and (ts, key) uniqueness invariants."""
     base = tempfile.mkdtemp(prefix="helix_prop_seq_")
     import atexit, shutil
 
@@ -126,31 +166,44 @@ def test_mutation_sequence_matches_model(spark, ops):
             rick_range=100,
             outdate_range=1 << 40,
             auto_maintain=False,
-            keep_generations=2,
+            keep_generations=keep,
         ),
     )
     model: dict[tuple[int, bytes], bytes] = {}
     cutoff = None
-    for kind, arg in ops:
-        if kind == "put":
-            rows = [(ts, key, val) for (ts, key), val in arg.items()]
-            db.put(rows)
-            for ts, key, val in rows:
-                model[(ts, key)] = val  # overwrite: highest seq wins
-        elif kind == "compact":
-            lo, hi = min(arg), max(arg)
-            db.compact(lo, hi)
-        elif kind == "outdate":
-            db.outdate(arg)
-            cutoff = arg if cutoff is None else max(cutoff, arg)
-        else:
-            # compaction is logically transparent, so its rollback is a
-            # logical no-op too — under ANY interleaving with puts and
-            # retention (the outdate cutoff lives in state, not in the
-            # rolled-back manifest, and the read path re-applies it to
-            # whatever directories the restore resurrects). The model
-            # therefore doesn't change; only the physical layout does.
-            db.rollback_compaction()
+    # AQE would coalesce every toy shuffle into one task, leaving one file
+    # per bucket and nothing for optimize to pack
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for kind, arg in ops:
+            if kind == "put":
+                rows = [(ts, key, val) for (ts, key), val in arg.items()]
+                db.put(rows)
+                for ts, key, val in rows:
+                    model[(ts, key)] = val  # overwrite: highest seq wins
+            elif kind == "compact":
+                lo, hi = min(arg), max(arg)
+                db.compact(lo, hi)
+            elif kind == "outdate":
+                db.outdate(arg)
+                cutoff = arg if cutoff is None else max(cutoff, arg)
+            elif kind == "optimize":
+                db.optimize(1 << 30)  # pure rewrite: logically a no-op
+            elif kind == "restore":
+                # re-importing the store's own chunks replaces each bucket
+                # with identical content: logically a no-op
+                db.restore_chunks(db.scan_raw((min(arg), max(arg))))
+            else:
+                # compaction is logically transparent, so its rollback is a
+                # logical no-op too — under ANY interleaving with puts and
+                # retention (the outdate cutoff lives in state, not in the
+                # rolled-back manifest, and the read path re-applies it to
+                # whatever directories the restore resurrects). The model
+                # therefore doesn't change; only the physical layout does.
+                db.rollback_compaction()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     expected = {
         (ts, key, val)
@@ -162,4 +215,5 @@ def test_mutation_sequence_matches_model(spark, ops):
         for r in db.scan((0, 499)).collect()
     }
     assert got == expected
+    _assert_cold_invariants(db)
     db.close()

@@ -785,3 +785,75 @@ def test_split_assignment_keys_on_content_not_id(spark):
     )
     got = {r["doc_id"]: r["s"] for r in docs.select("doc_id", split.alias("s")).collect()}
     assert got[1] == got[999]  # same content, different ids -> same split
+
+
+def _key_bloom_offsets(spark, gen_dir):
+    """Footer offset of the ``key`` column's bloom filter in every parquet
+    file under ``gen_dir`` (-1 = no bloom filter written)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    offsets = []
+    for root, _, files in os.walk(gen_dir):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    jvm.org.apache.hadoop.fs.Path(os.path.join(root, name)), conf
+                )
+            )
+            try:
+                for block in reader.getFooter().getBlocks():
+                    for col in block.getColumns():
+                        if col.getPath().toDotString() == "key":
+                            offsets.append(col.getBloomFilterOffset())
+            finally:
+                reader.close()
+    return offsets
+
+
+def test_restore_chunks_commits_like_a_compaction(spark, tmp_path):
+    """restore_chunks publishes through the cold commit protocol: the
+    superseded dir of a replaced bucket is GC'd, an empty import leaves no
+    staged dir, restored files carry the key bloom filter, and under
+    keep_generations the restore is rolled back like a compaction."""
+    src = _codec_db(spark, tmp_path / "src")
+    exported = src.scan_raw(time_range=(0, 199))
+
+    def replica(name, keep):
+        db = HelixSpark.open(
+            spark,
+            str(tmp_path / name),
+            HelixOptions(
+                rick_range=100,
+                outdate_range=1 << 30,
+                auto_maintain=False,
+                keep_generations=keep,
+            ),
+            codecs=src.codecs,
+        )
+        db.put([(12, b"blobkey", b"mine"), (11, b"arrkey", b"mine")])
+        db.compact(0, 99)  # bucket 0 live in gen=0
+        return db
+
+    dst = replica("dst", keep=0)
+    dst.restore_chunks(exported)  # replaces bucket 0
+    gen = dst._state["cold_manifest"]["0"]
+    assert gen == 1
+    assert not os.path.isdir(f"{dst.layout.cold_gen_path(0)}/time_bucket=0")
+    assert dst.get(12, b"blobkey") == b"v012"
+    assert dst.get(11, b"arrkey") == b"a011"
+    offsets = _key_bloom_offsets(spark, dst.layout.cold_gen_path(gen))
+    assert offsets and min(offsets) >= 0
+
+    dst.restore_chunks(exported.limit(0))
+    assert not os.path.isdir(dst.layout.cold_gen_path(2))
+    assert dst._state["cold_manifest"] == {"0": 1}
+
+    kept = replica("kept", keep=2)
+    kept.restore_chunks(exported)
+    assert kept.get(12, b"blobkey") == b"v012"
+    assert kept.rollback_compaction()
+    assert kept.get(12, b"blobkey") == b"mine"
+    for db in (src, dst, kept):
+        db.close()
