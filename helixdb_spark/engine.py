@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import functools
 import json
-import os
 from dataclasses import dataclass
 from typing import Iterable, Iterator, Optional, Sequence
 
@@ -560,25 +559,14 @@ class HelixSpark:
         self._refresh_indexes()
 
     # ------------------------------------------------------------- get/scan
-    @staticmethod
-    def _has_data(path: str) -> bool:
-        # local-FS fast path; remote URIs fall through to the reader
-        if "://" in path:
-            return True
-        return os.path.isdir(path) and any(
-            n.startswith("time_bucket=") for n in os.listdir(path)
-        )
-
     def _hot_df(self, path: Optional[str] = None) -> Optional[DataFrame]:
-        """Hot-layout rows under ``path`` (default: the live hot dir; a
-        snapshot read also passes the trash/ dirs compactions parked)."""
+        """Hot-layout rows under ``path`` (default: the live hot dir), or
+        None when it holds no bucket. The bucket listing is a driver-side
+        directory listing, not a Spark job."""
         path = path or self.layout.hot_path
-        if not self._has_data(path):
+        if not self._fs.list_buckets(path):
             return None
-        try:
-            return self.spark.read.schema(HOT_SCHEMA).parquet(path)
-        except Exception:
-            return None
+        return self.spark.read.schema(HOT_SCHEMA).parquet(path)
 
     def _cold_df(self, manifest: Optional[dict] = None) -> Optional[DataFrame]:
         """Cold rows per a bucket→generation manifest (default: the
@@ -735,67 +723,112 @@ class HelixSpark:
         parked: Sequence[str] = (),
         seq_cut: Optional[int] = None,
     ) -> DataFrame:
-        """Union hot + cold as logical entries with last-write-wins dedup on
-        (ts, key) (overwrite semantics — reference src/file/rick.rs:403-417).
+        """Logical entries of the read range: each (ts, key) once, holding
+        its last write (overwrite semantics — reference
+        src/file/rick.rs:403-417). The plan is split by time bucket:
 
-        Bucket predicates derived from the ts range reach the parquet scan as
-        partition filters (this is the reference's level pruning,
-        level_info.rs:98-111, done by Catalyst instead of by hand). Unlike
-        the reference — whose scan misses keys that live only in compacted
-        levels (SURVEY.md §3.3) — this view sees all levels; the survey calls
-        that strictly-more-correct and we keep it.
+        - A bucket with hot rows goes through the last-write-wins
+          aggregate on (ts, key), together with its committed cold chunk
+          rows if it has any.
+        - A cold-only bucket is read raw from its committed generation.
+          Compaction (and every other cold writer) leaves each (ts, key)
+          at most once per generation, and the manifest names one
+          generation per bucket, so these rows are already unique: they
+          skip the aggregate and its shuffle. This is the reference's
+          read path: compacted levels are time-disjoint and only overlap
+          is merged (level_info.rs:98-111).
+
+        Which buckets are hot is decided on the driver from one bucket
+        listing per hot directory; no Spark job runs before the read.
+        When the range holds no hot bucket the plan has no aggregate.
+
+        Bucket predicates derived from the ts range reach the parquet scans
+        as partition filters (the reference's level pruning, done by
+        Catalyst). Unlike the reference — whose scan misses keys that live
+        only in compacted levels (SURVEY.md §3.3) — this view sees all
+        levels; the survey calls that strictly-more-correct and we keep it.
 
         ``pre_filter`` (a key/ts predicate Column) and ``probe_df`` (exact
-        (p_ts, p_key) probes, broadcast-semi-joined) apply BELOW the dedup
-        window: the dedup groups by (ts, key), so dropping whole groups
-        early is equivalent — and the window shuffle then carries only the
-        selected rows instead of every entry in the ts range (at scale, the
-        difference between shuffling kilobytes and shuffling the table).
+        (p_ts, p_key) probes, broadcast-semi-joined) apply BELOW the
+        aggregate: it groups by (ts, key), so dropping whole groups early
+        is equivalent, and its shuffle carries only the selected rows.
 
         The defaults read the live view. A snapshot read (see
         :meth:`scan_asof_commit`) passes a historical cold ``manifest``, the
         ``parked`` trash/ dirs holding hot partitions later commits
-        dropped, and ``seq_cut``: hot rows put at or after it are hidden.
-        The current retention cutoff filters only the live view; a
-        snapshot shows what its commit saw, as far as retention has not
-        physically dropped it.
+        dropped (their buckets count as hot), and ``seq_cut``: hot rows put
+        at or after it are hidden. The current retention cutoff filters
+        only the live view; a snapshot shows what its commit saw, as far
+        as retention has not physically dropped it.
         """
-        parts = [
-            hot
-            for hot in map(self._hot_df, [self.layout.hot_path, *parked])
-            if hot is not None
-        ]
-        cold = self._cold_df(manifest)
-        if cold is not None:
-            parts.append(self._decode_cold(cold))
+        b_lo = None if ts_lo is None else self.layout.bucket_of(ts_lo)
+        b_hi = None if ts_hi is None else self.layout.bucket_of(ts_hi)
+
+        def in_range(b) -> bool:
+            b = int(b)
+            return (b_lo is None or b >= b_lo) and (b_hi is None or b <= b_hi)
+
+        hot_buckets: set[int] = set()
+        hot_dirs = []
+        for d in (self.layout.hot_path, *parked):
+            listed = [b for b in self._fs.list_buckets(d) if in_range(b)]
+            if listed:
+                hot_buckets.update(listed)
+                hot_dirs.append(d)
+        cutoff = self._state.get("outdate_cutoff") if manifest is None else None
+        if manifest is None:
+            manifest = self._state.get("cold_manifest") or {}
+        cold = {b: g for b, g in manifest.items() if in_range(b)}
+        overlap = [int(b) for b in cold if int(b) in hot_buckets]
+        raw = [int(b) for b in cold if int(b) not in hot_buckets]
+        # one cold relation, so one file listing, feeds both sides
+        cold_rows = self._cold_df(cold)
+
+        def cold_part(buckets: list) -> DataFrame:
+            return self._decode_cold(
+                cold_rows.where(F.col("time_bucket").isin(buckets))
+            )
+
+        def where(df: DataFrame) -> DataFrame:
+            return self._where_read(
+                df, ts_lo, ts_hi, pre_filter, probe_df, cutoff
+            )
+
+        parts = []
+        if hot_dirs:
+            merged = [
+                self.spark.read.schema(HOT_SCHEMA).parquet(d) for d in hot_dirs
+            ]
+            if overlap:
+                merged.append(cold_part(overlap))
+            df = functools.reduce(DataFrame.unionByName, merged)
+            if seq_cut is not None:
+                # cold rows carry seq=-1 and always pass — a snapshot's cold
+                # generations were staged before its commit
+                df = df.where(F.col("seq") < int(seq_cut))
+            # last-write-wins as a hash aggregation (max over (seq, value)
+            # struct) instead of a row_number window: map-side partial
+            # combine and no per-group sort. The winner is the highest seq,
+            # then the max value bytes.
+            parts.append(
+                where(df)
+                .groupBy("ts", "key")
+                .agg(
+                    F.max(F.struct("seq", "time_bucket", "value")).alias("_w")
+                )
+                .select(
+                    "ts",
+                    "key",
+                    F.col("_w.value").alias("value"),
+                    F.col("_w.seq").alias("seq"),
+                    F.col("_w.time_bucket").alias("time_bucket"),
+                )
+            )
+        if raw:
+            parts.append(where(cold_part(raw)))
         if not parts:
             return self.spark.createDataFrame([], HOT_SCHEMA)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        if seq_cut is not None:
-            # cold rows carry seq=-1 and always pass — a snapshot's cold
-            # generations were staged before its commit
-            df = df.where(F.col("seq") < int(seq_cut))
-        cutoff = self._state.get("outdate_cutoff") if manifest is None else None
-        df = self._where_read(df, ts_lo, ts_hi, pre_filter, probe_df, cutoff)
-
-        # last-write-wins as a hash aggregation (max over (seq, value) struct)
-        # instead of a row_number window: aggregates get map-side partial
-        # combine and skip the per-group sort — same winner (highest seq; the
-        # window's tie order within one put batch was arbitrary, struct-max
-        # makes it deterministic on value bytes).
-        return (
-            df.groupBy("ts", "key")
-            .agg(F.max(F.struct("seq", "time_bucket", "value")).alias("_w"))
-            .select(
-                "ts",
-                "key",
-                F.col("_w.value").alias("value"),
-                F.col("_w.seq").alias("seq"),
-                F.col("_w.time_bucket").alias("time_bucket"),
-            )
-        )
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def get(self, ts: int, key: bytes) -> Optional[bytes]:
         """Point lookup (reference src/db.rs:53-55, level routing
@@ -975,16 +1008,51 @@ class HelixSpark:
         so ``rollback_compaction`` undoes it. A bucket already present is
         REPLACED (restore-wins); the destination must be opened with a
         codec registry that knows the imported codec names or later reads
-        of those keys will fail."""
+        of those keys will fail.
+
+        Reads serve a cold-only bucket's rows without a merge, so the
+        import must hold each (ts, key) at most once. The staging write
+        observes, per (key, time_bucket), the number of imported chunks
+        and, for ARRAY chunks, the number of repeated timestamps. Any
+        repeat raises ``ValueError`` before the flip, with nothing
+        published (the staged generation dir is removed)."""
         self._check_open()
-        gen, produced = self._stage_generation(chunks)
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        chunk_ts = F.col("_c.chunk")["ts"]
+        staged = (
+            chunks.groupBy("key", "time_bucket")
+            .agg(
+                F.count(F.lit(1)).alias("_n"),
+                F.first(F.struct("codec", "chunk", "blob")).alias("_c"),
+            )
+            .observe(
+                obs,
+                F.max("_n").alias("chunks"),
+                F.max(
+                    F.when(
+                        F.col("_c.codec") == ARRAY_CODEC,
+                        F.size(chunk_ts) - F.size(F.array_distinct(chunk_ts)),
+                    )
+                ).alias("repeats"),
+                F.max(F.col("_c.codec") != ARRAY_CODEC).alias("blobs"),
+            )
+            .select("key", "_c.codec", "_c.chunk", "_c.blob", "time_bucket")
+        )
+        gen, produced = self._stage_generation(staged)
         if not produced:
             return
-        if not self._state.get("has_blobs") and not (
-            self.spark.read.parquet(self.layout.cold_gen_path(gen))
-            .where(F.col("codec") != ARRAY_CODEC)
-            .isEmpty()
-        ):
+        seen = obs.get
+        if seen["chunks"] > 1 or (seen["repeats"] or 0) > 0:
+            self._fs.delete(self.layout.cold_gen_path(gen))
+            raise ValueError(
+                "restore_chunks: the import holds a (ts, key) more than once "
+                f"(up to {seen['chunks']} chunks per (key, time_bucket), up "
+                f"to {seen['repeats'] or 0} repeated timestamps in one "
+                "chunk) — import one chunk per key and bucket"
+            )
+        if seen["blobs"]:
             # must land in the SAME commit that makes blob rows visible
             self._state["has_blobs"] = True
         self._publish_generation(gen, produced)
@@ -1778,15 +1846,21 @@ class HelixSpark:
         """Post-append drift policy (see register_index): total-variation
         distance between the newest segment's per-list assignment shares
         and the fit segment's; above the threshold either invalidate or
-        re-fit. Driver state is one stat row — never corpus-sized."""
+        re-fit. The statistic comes from the descriptor's per-list counts
+        on the driver (no Spark job); only a descriptor without them scans
+        the lists table. An empty chain (no rows in the fit or the newest
+        segment) has no drift."""
         if desc["kind"] != "ivf":
             raise ValueError(
                 "drift_threshold reads IVF list routing; index "
                 f"{name!r} is kind {desc['kind']!r} (only 'ivf' supports it)"
             )
-        if len(store._segments(desc)) <= 1:
-            return False  # nothing appended yet — no drift to measure
-        drift = float(store.ivf_share_drift(name).first()["share_drift"])
+        rows = store._share_drift_rows(desc)
+        if rows is None:
+            rows = store.ivf_share_drift(name).take(1)
+        if not rows:
+            return False
+        drift = float(rows[0][2])
         if drift <= threshold:
             return False
         if action == "refit":

@@ -59,6 +59,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from helixdb_spark.fsio import EngineFS
 from helixdb_spark.operators import similarity as sim
@@ -206,6 +207,14 @@ class AnnIndexStore:
     def _segments(desc: dict) -> list[int]:
         return [int(s) for s in desc.get("segments", [desc["gen"]])]
 
+    @staticmethod
+    def _appended_schemas(desc: dict) -> dict:
+        """Copy of a descriptor's recorded table schemas for an append to
+        extend. A descriptor written before schemas were recorded maps each
+        table to None, so its reads keep schema inference."""
+        unknown = dict.fromkeys(KIND_TABLES[desc["kind"]])
+        return dict(desc.get("schemas") or unknown)
+
     def _local_df(self, rows, schema: str) -> DataFrame:
         """Driver-sized result relation with ONE partition.
         ``createDataFrame(list)`` slices even a 1-row list across
@@ -224,12 +233,20 @@ class AnnIndexStore:
         ``seg IN (...)`` resolves to partition pruning, so superseded or
         in-flight segments are never opened, and a probe-side partition
         filter (``_bucket`` / ``centroid_id``) prunes within the same scan
-        node."""
+        node. Partition columns are inferred from the directory names; the
+        data columns are read with the schema ``_stage`` recorded in the
+        descriptor, so building the DataFrame starts no Spark job
+        (descriptors written without one keep parquet schema inference)."""
         if "segments" not in desc:  # legacy single-generation layout
             return self.spark.read.parquet(
                 f"{self._gen_path(name, desc['gen'])}/{table}"
             )
-        df = self.spark.read.parquet(self._table_root(name, table))
+        reader = self.spark.read
+        schema = (desc.get("schemas") or {}).get(table)
+        if schema is not None:
+            # the data schema _stage recorded: no footer-inference job
+            reader = reader.schema(schema)
+        df = reader.parquet(self._table_root(name, table))
         return df.where(
             F.col("seg").isin(self._segments(desc))
         ).drop("seg")
@@ -352,14 +369,27 @@ class AnnIndexStore:
         gen: int,
         partition_by: str | None = None,
         count: bool = True,
+        schemas: dict | None = None,
     ) -> int | None:
         """Write one segment and return its row count (observed on the
         write job itself, so the descriptor records what the write landed).
         ``count=False`` skips the count observation for tables whose row
         count the descriptor does not record (the bands table — its
         sibling shingles count is the bookkept one); a micro-batch append
-        is fixed-job-latency-bound, so every skipped job matters."""
+        is fixed-job-latency-bound, so every skipped job matters.
+
+        ``schemas`` (the descriptor's map of table -> data schema DDL)
+        records the segment's data schema for ``_read_table``. A segment
+        whose schema differs from the one already recorded for its table
+        sets the entry to None: that table's reads go back to schema
+        inference."""
         path = self._seg_path(name, table, gen)
+        if schemas is not None:
+            data = T.StructType(
+                [f for f in df.schema if f.name != partition_by]
+            ).toDDL()
+            if schemas.setdefault(table, data) != data:
+                schemas[table] = None
         if count:
             # the row count rides the write job as an Observation metric
             # (r12) instead of a count-back read of the written files —
@@ -514,9 +544,10 @@ class AnnIndexStore:
             train_fraction=train_fraction,
         )
         gen = self._reserve_gen()
+        schemas: dict = {}
         n_rows = self._stage(
             self._encode_pq(corpus, codebooks, sub_d, m, id_col, vec_col),
-            name, "codes", gen,
+            name, "codes", gen, schemas=schemas,
         )
         desc = {
             "kind": "pq",
@@ -529,6 +560,7 @@ class AnnIndexStore:
             "id_col": id_col,
             "n_rows": n_rows,
             "fingerprint": fingerprint,
+            "schemas": schemas,
             # JSON round-trips doubles exactly (repr-based), so the
             # reopened codebook is bit-identical to the fitted one
             "codebooks": [
@@ -623,9 +655,10 @@ class AnnIndexStore:
                 prefit=(codebooks, sub_d), fingerprint=fingerprint,
             )
         gen = self._reserve_gen()
+        schemas = self._appended_schemas(desc)
         n_new = self._stage(
             self._encode_pq(fresh, codebooks, sub_d, m, id_col, vec_col),
-            name, "codes", gen,
+            name, "codes", gen, schemas=schemas,
         )
         new_desc = dict(desc)
         new_desc.update(
@@ -634,6 +667,7 @@ class AnnIndexStore:
                 "segments": self._segments(desc) + [gen],
                 "n_rows": int(desc["n_rows"]) + n_new,
                 "fingerprint": fingerprint or desc.get("fingerprint"),
+                "schemas": schemas,
             }
         )
         self._commit(name, new_desc)
@@ -658,7 +692,10 @@ class AnnIndexStore:
         bucketed = spread(corpus).withColumn(
             "_bucket", lsh_bucket(F.col(vec_col), num_planes, dim)
         )
-        n_rows = self._stage(bucketed, name, "buckets", gen, "_bucket")
+        schemas: dict = {}
+        n_rows = self._stage(
+            bucketed, name, "buckets", gen, "_bucket", schemas=schemas
+        )
         desc = {
             "kind": "lsh",
             "gen": gen,
@@ -669,6 +706,7 @@ class AnnIndexStore:
             "vec_col": vec_col,
             "n_rows": n_rows,
             "fingerprint": fingerprint,
+            "schemas": schemas,
         }
         self._commit(name, desc)
         return desc
@@ -748,7 +786,10 @@ class AnnIndexStore:
                 int(desc["dim"]),
             ),
         )
-        n_new = self._stage(staged, name, "buckets", gen, "_bucket")
+        schemas = self._appended_schemas(desc)
+        n_new = self._stage(
+            staged, name, "buckets", gen, "_bucket", schemas=schemas
+        )
         new_desc = dict(desc)
         new_desc.update(
             {
@@ -756,6 +797,7 @@ class AnnIndexStore:
                 "segments": self._segments(desc) + [gen],
                 "n_rows": int(desc["n_rows"]) + n_new,
                 "fingerprint": fingerprint or desc.get("fingerprint"),
+                "schemas": schemas,
             }
         )
         self._commit(name, new_desc)
@@ -845,9 +887,14 @@ class AnnIndexStore:
             docs, id_col, text_col, n, num_hashes, bands, caches=caches
         )
         gen = self._reserve_gen()
+        schemas: dict = {}
         try:
-            self._stage(stacked, name, "bands", gen, count=False)
-            n_rows = self._stage(shingles, name, "shingles", gen)
+            self._stage(
+                stacked, name, "bands", gen, count=False, schemas=schemas
+            )
+            n_rows = self._stage(
+                shingles, name, "shingles", gen, schemas=schemas
+            )
         finally:  # staging is eager — safe to release
             for c in caches:
                 c.unpersist()
@@ -866,6 +913,7 @@ class AnnIndexStore:
             "text_col": text_col,
             "n_rows": n_rows,
             "fingerprint": fingerprint,
+            "schemas": schemas,
         }
         self._commit(name, desc)
         return desc
@@ -944,6 +992,7 @@ class AnnIndexStore:
             int(desc["num_hashes"]), int(desc["bands"]), caches=caches,
         )
         gen = self._reserve_gen()
+        schemas = self._appended_schemas(desc)
         try:
             # materialize the shingle cache at full parallelism FIRST,
             # then write a SMALL delta as one file each: a streaming
@@ -956,11 +1005,11 @@ class AnnIndexStore:
             one = n_new is not None and n_new <= SINGLE_FILE_APPEND_ROWS
             self._stage(
                 stacked.coalesce(1) if one else stacked,
-                name, "bands", gen, count=False,
+                name, "bands", gen, count=False, schemas=schemas,
             )
             self._stage(
                 shingles.coalesce(1) if one else shingles,
-                name, "shingles", gen, count=n_new is None,
+                name, "shingles", gen, count=n_new is None, schemas=schemas,
             )
         finally:
             for c in caches:
@@ -972,6 +1021,7 @@ class AnnIndexStore:
                 "segments": self._segments(desc) + [gen],
                 "n_rows": int(desc["n_rows"]) + n_new,
                 "fingerprint": fingerprint or desc.get("fingerprint"),
+                "schemas": schemas,
             }
         )
         self._commit(name, new_desc)
@@ -1001,7 +1051,11 @@ class AnnIndexStore:
         rule's O(n²/stride). The rule stays deterministic and
         SQL-replayable: stride = greatest(1, ceil(n / ceil(sqrt(n)))),
         centroids = rows with id % stride = 0 (a broadcast 1-row count,
-        no driver job)."""
+        no driver job).
+
+        The centroid table is staged first and the lists are assigned
+        against the staged table, so a derived centroid plan (the √n
+        count and cross join) runs once, not once per table."""
         from helixdb_spark.operators.similarity import (
             assign_nearest_centroid,
             sqrt_stride_centroids,
@@ -1015,13 +1069,7 @@ class AnnIndexStore:
                     F.col(id_col).alias("centroid_id"),
                     F.col(vec_col).alias("_cvec"),
                 )
-        assigned = assign_nearest_centroid(
-            spread(corpus), centroids, vec_col, id_col
-        )
         gen = self._reserve_gen()
-        n_rows = self._stage(assigned, name, "lists", gen, "centroid_id")
-        self._stage(centroids, name, "centroids", gen)
-        cnts = self._list_counts_readback(name, gen, n_rows)
         desc = {
             "kind": "ivf",
             "gen": gen,
@@ -1029,9 +1077,24 @@ class AnnIndexStore:
             "stride": stride,
             "id_col": id_col,
             "vec_col": vec_col,
-            "n_rows": n_rows,
             "fingerprint": fingerprint,
+            "schemas": {},
         }
+        self._stage(
+            centroids, name, "centroids", gen, count=False,
+            schemas=desc["schemas"],
+        )
+        assigned = assign_nearest_centroid(
+            spread(corpus),
+            self._read_table(name, desc, "centroids"),
+            vec_col,
+            id_col,
+        )
+        n_rows = desc["n_rows"] = self._stage(
+            assigned, name, "lists", gen, "centroid_id",
+            schemas=desc["schemas"],
+        )
+        cnts = self._list_counts_readback(name, gen, n_rows)
         if cnts is not None:
             desc["list_counts"] = {
                 str(gen): {str(c): n for c, n in cnts.items()}
@@ -1146,7 +1209,10 @@ class AnnIndexStore:
             fresh, centroids, desc["vec_col"], id_col
         )
         gen = self._reserve_gen()
-        n_new = self._stage(staged, name, "lists", gen, "centroid_id")
+        schemas = self._appended_schemas(desc)
+        n_new = self._stage(
+            staged, name, "lists", gen, "centroid_id", schemas=schemas
+        )
         new_desc = dict(desc)
         new_desc.update(
             {
@@ -1154,6 +1220,7 @@ class AnnIndexStore:
                 "segments": self._segments(desc) + [gen],
                 "n_rows": int(desc["n_rows"]) + n_new,
                 "fingerprint": fingerprint or desc.get("fingerprint"),
+                "schemas": schemas,
             }
         )
         old_lc = desc.get("list_counts")
@@ -1213,13 +1280,14 @@ class AnnIndexStore:
                 resid, m, k, n_iter, id_col, "_rv"
             )
             gen = self._reserve_gen()
+            schemas: dict = {}
             n_rows = self._stage(
                 ivfpq_encode_codes(resid, codebooks, sub_d, m, id_col),
-                name, "lists", gen, "centroid_id",
+                name, "lists", gen, "centroid_id", schemas=schemas,
             )
         finally:  # staging is eager — safe to release
             resid.unpersist()
-        self._stage(centroids, name, "centroids", gen)
+        self._stage(centroids, name, "centroids", gen, schemas=schemas)
         desc = {
             "kind": "ivfpq",
             "gen": gen,
@@ -1233,6 +1301,7 @@ class AnnIndexStore:
             "vec_col": vec_col,
             "n_rows": n_rows,
             "fingerprint": fingerprint,
+            "schemas": schemas,
             # JSON round-trips doubles exactly (repr-based)
             "codebooks": [
                 [[int(cid), [float(x) for x in cv]] for cid, cv in book]
@@ -1312,9 +1381,10 @@ class AnnIndexStore:
             fresh, centroids, id_col, desc["vec_col"]
         )
         gen = self._reserve_gen()
+        schemas = self._appended_schemas(desc)
         n_new = self._stage(
             ivfpq_encode_codes(resid, codebooks, sub_d, m, id_col),
-            name, "lists", gen, "centroid_id",
+            name, "lists", gen, "centroid_id", schemas=schemas,
         )
         new_desc = dict(desc)
         new_desc.update(
@@ -1323,6 +1393,7 @@ class AnnIndexStore:
                 "segments": self._segments(desc) + [gen],
                 "n_rows": int(desc["n_rows"]) + n_new,
                 "fingerprint": fingerprint or desc.get("fingerprint"),
+                "schemas": schemas,
             }
         )
         self._commit(name, new_desc)
@@ -1387,6 +1458,41 @@ class AnnIndexStore:
             ).alias("mean_assign_cosine"),
         ).orderBy("segment_idx")
 
+    def _share_drift_rows(self, desc: dict) -> "list[tuple] | None":
+        """``ivf_share_drift``'s rows computed on the driver, or None when
+        only the lists-table scan can answer: the chain has an appended
+        segment and its descriptor lacks per-list counts for a segment."""
+        segs = self._segments(desc)
+        if len(segs) <= 1:
+            return [(int(desc["n_rows"]), 0, 0.0)]
+        meta = self._list_counts_meta(desc)
+        if meta is None:
+            return None
+        # zero-JOB path (r12): the per-(segment, list) counts were
+        # recorded at write time, and the whole statistic is integer sums
+        # plus the two fixed-point helpers, so it runs on the driver —
+        # ``_share_fp``/``_round6`` mirror the Spark expressions of the
+        # scan fallback bit-for-bit (pinned by
+        # test_ivf_drift_meta_path_matches_scan_path and the randomized
+        # cross-check in tests/test_round12_ops.py). The full outer join
+        # on centroid_id is the dict union below; sums over the union
+        # equal sums over each dict (missing keys contribute 0).
+        fitc, newc = meta[segs[0]], meta[segs[-1]]
+        lists_union = set(fitc) | set(newc)
+        if not lists_union:
+            # the scan path's final groupBy over an empty relation yields
+            # zero rows — preserve that degenerate shape
+            return []
+        tf, tn = sum(fitc.values()), sum(newc.values())
+        sd = sum(
+            abs(
+                self._share_fp(fitc.get(c, 0), tf)
+                - self._share_fp(newc.get(c, 0), tn)
+            )
+            for c in lists_union
+        )
+        return [(tf, tn, self._round6(1e-9 + sd / 2e9))]
+
     def ivf_share_drift(self, name: str = "ivf") -> DataFrame:
         """Assignment-SHARE drift of an IVF chain: total-variation distance
         between the per-list assignment shares of the newest appended
@@ -1411,62 +1517,31 @@ class AnnIndexStore:
         a sum of int64s, partition-order independent, ±0.5e-9 per list
         quantization error)."""
         desc = self._descriptor(name, "ivf")
+        rows = self._share_drift_rows(desc)
+        if rows is not None:
+            return self._local_df(
+                rows, "n_fit long, n_newest long, share_drift double"
+            )
         segs = self._segments(desc)
-        if len(segs) <= 1:
-            return self._local_df(
-                [(int(desc["n_rows"]), 0, 0.0)],
-                "n_fit long, n_newest long, share_drift double",
+        lists = self.spark.read.parquet(self._table_root(name, "lists"))
+        counts = (
+            lists.where(F.col("seg").isin([segs[0], segs[-1]]))
+            .groupBy("seg", "centroid_id")
+            .agg(F.count("*").alias("_n"))
+        )
+        fit = counts.where(F.col("seg") == segs[0]).select(
+            "centroid_id", F.col("_n").alias("_nf")
+        )
+        new = counts.where(F.col("seg") == segs[-1]).select(
+            "centroid_id", F.col("_n").alias("_nn")
+        )
+        j = (
+            fit.join(new, "centroid_id", "full")
+            .select(
+                F.coalesce("_nf", F.lit(0)).alias("_nf"),
+                F.coalesce("_nn", F.lit(0)).alias("_nn"),
             )
-        meta = self._list_counts_meta(desc)
-        if meta is not None:
-            # zero-JOB path (r12): the per-(segment, list) counts were
-            # recorded at write time, and the whole statistic is integer
-            # sums plus the two fixed-point helpers, so it runs on the
-            # driver — ``_share_fp``/``_round6`` mirror the Spark
-            # expressions of the scan fallback bit-for-bit (pinned by
-            # test_ivf_drift_meta_path_matches_scan_path and the
-            # randomized cross-check in tests/test_round12_ops.py); only
-            # the one-row result becomes a DataFrame. The full outer join
-            # on centroid_id is the dict union below; sums over the union
-            # equal sums over each dict (missing keys contribute 0).
-            fitc, newc = meta[segs[0]], meta[segs[-1]]
-            lists_union = set(fitc) | set(newc)
-            schema = "n_fit long, n_newest long, share_drift double"
-            if not lists_union:
-                # the scan path's final groupBy over an empty relation
-                # yields zero rows — preserve that degenerate shape
-                return self._local_df([], schema)
-            tf, tn = sum(fitc.values()), sum(newc.values())
-            sd = sum(
-                abs(
-                    self._share_fp(fitc.get(c, 0), tf)
-                    - self._share_fp(newc.get(c, 0), tn)
-                )
-                for c in lists_union
-            )
-            return self._local_df(
-                [(tf, tn, self._round6(1e-9 + sd / 2e9))], schema
-            )
-        else:
-            lists = self.spark.read.parquet(self._table_root(name, "lists"))
-            counts = (
-                lists.where(F.col("seg").isin([segs[0], segs[-1]]))
-                .groupBy("seg", "centroid_id")
-                .agg(F.count("*").alias("_n"))
-            )
-            fit = counts.where(F.col("seg") == segs[0]).select(
-                "centroid_id", F.col("_n").alias("_nf")
-            )
-            new = counts.where(F.col("seg") == segs[-1]).select(
-                "centroid_id", F.col("_n").alias("_nn")
-            )
-            j = (
-                fit.join(new, "centroid_id", "full")
-                .select(
-                    F.coalesce("_nf", F.lit(0)).alias("_nf"),
-                    F.coalesce("_nn", F.lit(0)).alias("_nn"),
-                )
-            )
+        )
         tot = j.agg(
             F.sum("_nf").alias("_tf"), F.sum("_nn").alias("_tn")
         )
@@ -1643,10 +1718,11 @@ class AnnIndexStore:
         }
         gen = self._reserve_gen()
         part_by = {"buckets": "_bucket", "lists": "centroid_id"}
+        schemas: dict = {}
         for t, df in tables.items():
-            self._stage(df, name, t, gen, part_by.get(t))
+            self._stage(df, name, t, gen, part_by.get(t), schemas=schemas)
         new_desc = dict(desc)
-        new_desc.update({"gen": gen, "segments": [gen]})
+        new_desc.update({"gen": gen, "segments": [gen], "schemas": schemas})
         meta = self._list_counts_meta(desc) if kind == "ivf" else None
         if meta is not None:
             # a fold is a pure rewrite: the merged segment's per-list

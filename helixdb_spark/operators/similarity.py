@@ -377,12 +377,16 @@ def sqrt_stride_centroids(
     arithmetic is one scalar subquery in SQL (both engines divide BIGINT
     by the ceil'd double sqrt in IEEE doubles, so the stride is
     bit-identical), and the count rides a broadcast 1-row aggregate — no
-    driver job, no sampling nondeterminism."""
+    driver job, no sampling nondeterminism. An empty corpus (n = 0, where
+    ANSI mode would raise on 0 / 0) gets stride 1 and no centroids; for
+    n >= 1 the divisor ceil(sqrt(n)) is already at least 1."""
     n = corpus.agg(F.count("*").alias("_n"))
     stride = n.select(
         F.greatest(
             F.lit(1).cast("long"),
-            F.ceil(F.col("_n") / F.ceil(F.sqrt(F.col("_n")))).cast("long"),
+            F.ceil(
+                F.col("_n") / F.greatest(F.ceil(F.sqrt(F.col("_n"))), F.lit(1))
+            ).cast("long"),
         ).alias("_stride")
     )
     return (

@@ -13,17 +13,35 @@ import uuid
 from helixdb_spark import HelixOptions, HelixSpark
 
 # jobs fired by each call below. restore_chunks lists its imported buckets
-# from the staged directory; a distinct() over the re-read generation would
-# add three (schema inference plus the two stages of the aggregate).
+# from the staged directory, and its staging write observes the duplicate
+# and blob-codec checks; re-reading the generation for either would add
+# jobs (schema inference plus a scan per check).
+# Reads come in two shapes: over a range that overlaps a hot bucket, the
+# last-write-wins aggregate adds a shuffle; over a fully compacted range
+# the cold rows are read raw, without it.
 EXPECTED_JOBS = {
     "put": 2,
     "compact": 3,
     "optimize": 3,
     "bulk_load": 2,
-    "restore_chunks": 5,
+    "restore_chunks": 3,
     "get_many": 3,
     "scan": 4,
     "get_many_asof": 6,
+    "cold_get_many": 2,
+    "cold_scan": 3,
+    "cold_get_many_asof": 5,
+}
+
+# index-store calls. Staged tables record their schema in the descriptor,
+# so reading a table back starts no schema-inference job, and a drift
+# decision on recorded per-list counts starts none at all.
+EXPECTED_INDEX_JOBS = {
+    "write_ivf": 7,
+    "append_ivf": 4,
+    "drift_decision": 0,
+    "compact_index": 3,
+    "ivf_topk": 7,
 }
 
 
@@ -66,10 +84,51 @@ def test_engine_call_job_counts(spark, tmp_path):
         spark, lambda: dst.restore_chunks(db.scan_raw((0, 19)))
     )
 
+    # buckets 0, 1, 10 and 11 are cold only; 2 and 3 are hot
     probes = [(t, b"k%02d" % (t % 16)) for t in (3, 15, 25, 105)]
     got["get_many"] = _jobs(spark, lambda: db.get_many(probes))
     got["scan"] = _jobs(spark, lambda: db.scan((0, 119)).collect())
     got["get_many_asof"] = _jobs(spark, lambda: db.get_many_asof(probes))
+    cold = probes[:2]
+    got["cold_get_many"] = _jobs(spark, lambda: db.get_many(cold))
+    got["cold_scan"] = _jobs(spark, lambda: db.scan((0, 19)).collect())
+    got["cold_get_many_asof"] = _jobs(spark, lambda: db.get_many_asof(cold))
     assert got == EXPECTED_JOBS
     db.close()
     dst.close()
+
+
+def _vectors(spark, ids, id_col="vec_id"):
+    return spark.createDataFrame(
+        [(i, [float(i * 7 % 5) + 0.5, float(i % 3)]) for i in ids],
+        f"{id_col} long, embedding array<double>",
+    )
+
+
+def test_index_store_call_job_counts(spark, tmp_path):
+    from helixdb_spark.index_store import AnnIndexStore
+
+    store = AnnIndexStore(spark, str(tmp_path / "idx"))
+    db = HelixSpark.open(spark, str(tmp_path / "db"))
+    got = {
+        "write_ivf": _jobs(
+            spark,
+            lambda: store.write_ivf(_vectors(spark, range(40)), stride="sqrt"),
+        )
+    }
+    desc = {}
+
+    def append():
+        delta = _vectors(spark, range(40, 60))
+        desc.update(store.append_ivf(delta, assume_new=True))
+
+    got["append_ivf"] = _jobs(spark, append)
+    got["drift_decision"] = _jobs(
+        spark,
+        lambda: db._drift_tripped(store, "ivf", desc, 1.0, "invalidate", None),
+    )
+    got["compact_index"] = _jobs(spark, lambda: store.compact_index("ivf"))
+    queries = _vectors(spark, [3, 8], id_col="query_id")
+    got["ivf_topk"] = _jobs(spark, lambda: store.ivf_topk(queries).collect())
+    assert got == EXPECTED_INDEX_JOBS
+    db.close()

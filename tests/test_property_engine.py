@@ -11,7 +11,7 @@ import os
 import tempfile
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from helixdb_spark.codecs import CodecRegistry
@@ -139,9 +139,48 @@ def _assert_cold_invariants(db) -> None:
     assert len(ids) == len(set(ids))
 
 
+def _assert_point_reads(db, model, cutoff) -> None:
+    """``get_many`` and ``get_many_asof`` agree with the model over the
+    first cold-only bucket (read raw, no merge) and over the whole range
+    when it holds a hot bucket (merged and raw buckets in one plan)."""
+    rick = db.layout.rick_range
+    hot = db._fs.list_buckets(db.layout.hot_path)
+    cold_only = sorted({int(b) for b in db._state["cold_manifest"]} - set(hot))
+    ranges = [(b * rick, b * rick + rick - 1) for b in cold_only[:1]]
+    if hot:
+        ranges.append((0, 499))
+
+    def live(ts):
+        return cutoff is None or ts > cutoff
+
+    keys = sorted({k for _, k in model} | {b"\x00miss"})
+    for lo, hi in ranges:
+        probes = [p for p in model if lo <= p[0] <= hi]
+        probes += [(lo, b"\x00miss"), (hi, b"\x00miss")]
+        assert db.get_many(probes) == {
+            p: model[p] for p in probes if p in model and live(p[0])
+        }
+        asof = [(ts, k) for ts in (lo, hi) for k in keys]
+        want = {}
+        for ts, k in asof:
+            seen = [t for t, kk in model if kk == k and t <= ts and live(t)]
+            if seen:
+                want[(ts, k)] = (max(seen), model[(max(seen), k)])
+        assert db.get_many_asof(asof) == want
+
+
 @given(
     ops=st.lists(_op_st, min_size=2, max_size=6),
     keep=st.sampled_from([0, 2]),
+)
+# a late overwrite of a compacted entry: its bucket is hot and cold at once
+@example(
+    ops=[
+        ("put", {(5, b"a"): b"1", (150, b"b"): b"2"}),
+        ("compact", (0, 199)),
+        ("put", {(5, b"a"): b"3"}),
+    ],
+    keep=0,
 )
 @settings(
     max_examples=6,
@@ -153,8 +192,10 @@ def test_mutation_sequence_matches_model(spark, ops, keep):
     self-restore agrees with a trivial last-write-wins + retention model.
     Exercises the generation-manifest commit across MULTIPLE commits (gen
     chains, bucket re-merges) and the cutoff/manifest interplay — the
-    state space the example tests can't enumerate — and ends by checking
-    the cold layout's liveness and (ts, key) uniqueness invariants."""
+    state space the example tests can't enumerate. It ends with a full
+    scan, point and as-of reads over a cold-only and a hot-overlapping
+    range, and the cold layout's liveness and (ts, key) uniqueness
+    invariants."""
     base = tempfile.mkdtemp(prefix="helix_prop_seq_")
     import atexit, shutil
 
@@ -215,5 +256,6 @@ def test_mutation_sequence_matches_model(spark, ops, keep):
         for r in db.scan((0, 499)).collect()
     }
     assert got == expected
+    _assert_point_reads(db, model, cutoff)
     _assert_cold_invariants(db)
     db.close()
